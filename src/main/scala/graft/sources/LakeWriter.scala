@@ -568,6 +568,11 @@ object LakeWriter {
     Some(s"""{"protocol":{"minReaderVersion":${snap.minReader},"minWriterVersion":7$rfJson,"writerFeatures":${jarr(wf)}}}""")
   }
 
+  /** The writer features writer version 2 implies; every restatement
+    * to the (*, 7) feature form lists them explicitly.
+    */
+  private val ImpliedWriterFeatures: Seq[String] = Seq("appendOnly", "invariants")
+
   /** EVERY legacy obligation the table actually declares, made
     * explicit when a protocol restates to the (*, 7) feature form — a
     * feature list that DROPPED one (generated columns, identity,
@@ -576,7 +581,7 @@ object LakeWriter {
   private def legacyObligations(snap: DeltaReader.Snapshot): Set[String] = {
     val conf = snap.configuration
     val table = tableSchema(snap)
-    Set("appendOnly", "invariants") ++
+    ImpliedWriterFeatures.toSet ++
       (if (cdfEnabled(snap)) Set("changeDataFeed") else Set.empty) ++
       (if (conf.keys.exists(_.startsWith("delta.constraints."))) Set("checkConstraints")
        else Set.empty) ++
@@ -586,6 +591,25 @@ object LakeWriter {
         Set("generatedColumns") else Set.empty) ++
       (if (IdentityColumns.hasIdentity(table)) Set(IdentityColumns.Feature)
        else Set.empty)
+  }
+
+  /** The legacy writer obligations a (*, 7) restatement lists for a
+    * table: appendOnly/invariants always (writer version 2 implies
+    * them), CHECK constraints and generated columns only where the
+    * table's writer version already binds them (3 and 4), CDF when
+    * enabled, and column mapping in either mode.
+    */
+  private def versionedObligations(snap: DeltaReader.Snapshot, cm: String): Set[String] = {
+    val table = tableSchema(snap)
+    ImpliedWriterFeatures.toSet ++
+      (if (snap.minWriter >= 3 &&
+          snap.configuration.keys.exists(_.startsWith("delta.constraints.")))
+        Set("checkConstraints") else Set.empty) ++
+      (if (snap.minWriter >= 4 &&
+          table.fields.exists(_.metadata.contains("delta.generationExpression")))
+        Set("generatedColumns") else Set.empty) ++
+      (if (cdfEnabled(snap)) Set("changeDataFeed") else Set.empty) ++
+      (if (cm != "none") Set("columnMapping") else Set.empty)
   }
 
   /** ALTER TABLE ... ALTER COLUMN c SET DEFAULT expr / DROP DEFAULT —
@@ -691,6 +715,109 @@ object LakeWriter {
   private def tableSchema(snap: DeltaReader.Snapshot): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
+
+  /** The writer features every graft write operation admits — appends,
+    * mutations, RESTORE and the dataChange=false rewrites alike. A
+    * writer-version-7 table is writable only when each feature it
+    * declares is here or in the operation's row-tracking term. Writer
+    * versions up to 5 carry only legacy obligations, all of which every
+    * operation honors; version 6 (legacy identity columns) is refused.
+    *
+    * Why each family is safe:
+    *  - `appendOnly`, `invariants`, `checkConstraints`,
+    *    `generatedColumns`, `allowColumnDefaults`, identity columns:
+    *    every operation that writes new values runs them through
+    *    [[enforceObligations]] (constraints and invariants checked,
+    *    generated columns computed or verified, defaults filled) and
+    *    advances the identity high watermark in the same commit;
+    *    `appendOnly` is enforced by [[writeGate]] itself. Removing rows
+    *    cannot violate a constraint, and a dataChange=false rewrite
+    *    re-states rows that already passed every check.
+    *  - `changeDataFeed`: row-changing operations stage their change
+    *    data in the same commit; rewrites carry dataChange=false, which
+    *    change-feed readers skip (the protocol's OPTIMIZE carve-out).
+    *  - `deletionVectors`: every scan applies the vectors, so a rewrite
+    *    keeps only live rows and drops the descriptors with its removes,
+    *    and merge-on-read operations union new deletes with the file's
+    *    existing vector. A pure append touches no existing file.
+    *  - `columnMapping`, `typeWidening`, `variantType`,
+    *    `variantShredding`, `timestampNtz`: staging writes physical names
+    *    and parquet field ids ([[stagePhysicalRows]]) under the declared
+    *    types, which readers resolve through the same schema.
+    *  - `inCommitTimestamp`: every commit path stamps its commitInfo
+    *    above the previous commit's stamp ([[ictStampContent]]).
+    *  - `vacuumProtocolCheck`, `checkpointProtection`, `v2Checkpoints`:
+    *    they bind VACUUM, log cleanup and checkpoint writers, which
+    *    honor them; a data write is unaffected.
+    *  - clustering and `domainMetadata`: commits carry every domain
+    *    through, and re-added files keep their clustering provider.
+    *
+    * Row tracking has two terms because the protocol has two profiles.
+    * Row-changing writes follow the non-preserving one: new and
+    * rewritten rows take fresh ids from the high watermark, so they
+    * need only an established watermark ([[RowTracking.safeExtra]]).
+    * dataChange=false rewrites (OPTIMIZE, clustering, column-mapping
+    * removal) must keep every row's id, so they also need the
+    * materialized id columns ([[RowTracking.preservedExtra]]).
+    */
+  private val WritableFeatures: Set[String] = Set("appendOnly", "invariants",
+    "checkConstraints", "generatedColumns", "allowColumnDefaults", IdentityColumns.Feature,
+    "changeDataFeed", "deletionVectors", "columnMapping", "typeWidening", "variantType",
+    "variantShredding", "timestampNtz", "inCommitTimestamp", "vacuumProtocolCheck",
+    "checkpointProtection", "v2Checkpoints") ++ Clustering.Features
+
+  /** Why `op` may not write the table, or None when it may: an unknown
+    * column-mapping mode, `delta.appendOnly` for an operation that
+    * removes rows, or a writer protocol outside [[WritableFeatures]]
+    * plus `rowTracking` (the operation's row-tracking term).
+    */
+  private def writeRefusal(snap: DeltaReader.Snapshot, op: String, removesRows: Boolean,
+                           rowTracking: Set[String]): Option[String] = {
+    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
+    val unsafe = snap.writerFeatures.filterNot(WritableFeatures ++ rowTracking)
+    if (!(cm == "none" || cm == "name" || cm == "id"))
+      Some(s"$op: unknown column mapping mode '$cm'")
+    else if (removesRows && snap.configuration.get("delta.appendOnly").contains("true"))
+      Some(s"$op: table declares delta.appendOnly=true — this operation removes rows; " +
+        "refusing")
+    else if (snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty)) None
+    else Some(s"$op: table requires writer version ${snap.minWriter}" +
+      (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
+      " — refusing a write whose obligations this writer cannot honor")
+  }
+
+  /** [[writeRefusal]] as a gate: throws the refusal, else returns the
+    * table's column-mapping mode.
+    */
+  private[graft] def writeGate(snap: DeltaReader.Snapshot, op: String, removesRows: Boolean,
+                               rowTracking: Set[String]): String = {
+    writeRefusal(snap, op, removesRows, rowTracking).foreach(m =>
+      throw new IllegalArgumentException(m))
+    snap.configuration.getOrElse("delta.columnMapping.mode", "none")
+  }
+
+  /** The normalized absolute path of a live file — the form a lineage
+    * scan's `__dv_path` column carries.
+    */
+  private def absPath(fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
+                      a: DeltaReader.AddFile): String =
+    fs.makeQualified(DeltaReader.resolveAddPath(root, a.path)).toUri.getPath
+
+  /** The live files behind `matchedPaths` (a lineage scan's collected
+    * `__dv_path` set). Every matched path must resolve back to a log
+    * entry: a file the commit would not remove would keep its matched
+    * rows alive.
+    */
+  private[graft] def affectedFiles(fs: org.apache.hadoop.fs.FileSystem,
+                                   root: org.apache.hadoop.fs.Path,
+                                   snap: DeltaReader.Snapshot, matchedPaths: Set[String],
+                                   op: String): Seq[DeltaReader.AddFile] = {
+    val affected = snap.active.filter(a => matchedPaths.contains(absPath(fs, root, a)))
+    require(affected.size == matchedPaths.size,
+      s"$op: resolved ${affected.size} of ${matchedPaths.size} matched files " +
+        "back to log entries — path normalization bug, refusing to commit")
+    affected
+  }
 
   /** ALTER TABLE ADD COLUMNS: append nullable columns as a
     * metadata-only commit — existing files simply lack them and the
@@ -1181,9 +1308,7 @@ object LakeWriter {
     }
     unset.foreach(k => require(!k.startsWith("delta.columnMapping"),
       s"alterProperties: unsetting '$k' would orphan the mapped schema; refusing"))
-    DeltaStats.validateStatsColumns(setP,
-      org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType], "alterProperties")
+    DeltaStats.validateStatsColumns(setP, tableSchema(snap), "alterProperties")
     val newConf0 = (cur ++ setP) -- unset
     val enablingCdf = set.get("delta.enableChangeDataFeed").contains("true") &&
       !cur.get("delta.enableChangeDataFeed").contains("true")
@@ -1226,7 +1351,7 @@ object LakeWriter {
         val om = new com.fasterxml.jackson.databind.ObjectMapper()
         def jarr(xs: Iterable[String]): String =
           xs.toSeq.distinct.sorted.map(om.writeValueAsString).mkString("[", ",", "]")
-        val legacy = Set("appendOnly", "invariants") ++
+        val legacy = ImpliedWriterFeatures.toSet ++
           (if (cdfEnabled(snap) || enablingCdf) Set("changeDataFeed") else Set.empty) ++
           (if (cur.keys.exists(_.startsWith("delta.constraints.")) || addingConstraint)
             Set("checkConstraints") else Set.empty) ++
@@ -1356,16 +1481,7 @@ object LakeWriter {
       "removeColumnMapping: row tracking is declared but the preserved-profile " +
         "configuration is incomplete (enableRowTracking backfill missing) — " +
         "a rewrite would silently re-identify every row; refusing")
-    val safe = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "checkConstraints",
-      "generatedColumns", "changeDataFeed", "deletionVectors", "columnMapping",
-      "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints",
-      IdentityColumns.Feature) ++
-      Clustering.Features ++ (if (rt) RowTracking.Features else Set.empty[String])
-    val unsafe = snap.writerFeatures.filterNot(safe)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"removeColumnMapping: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a rewrite whose obligations this writer cannot honor")
+    writeGate(snap, "removeColumnMapping", removesRows = false, RowTracking.preservedExtra(snap))
     val table = tableSchema(snap)
     // the stripped LOGICAL schema: no ids, no physical names — while
     // comments, defaults, generation expressions and widening history
@@ -1599,7 +1715,7 @@ object LakeWriter {
     val convRw = (if (hasVariant(tableSchema)) Seq("variantType") else Nil) ++
       (if (hasNtz(tableSchema)) Seq("timestampNtz") else Nil)
     if (convRw.nonEmpty) {
-      val fj = (Seq("appendOnly", "invariants") ++ convRw).sorted
+      val fj = (ImpliedWriterFeatures ++ convRw).sorted
         .map(om.writeValueAsString).mkString("[", ",", "]")
       actions += s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${convRw.sorted.map(om.writeValueAsString).mkString("[", ",", "]")},"writerFeatures":$fj}}"""
     } else
@@ -1848,8 +1964,7 @@ object LakeWriter {
         .build())
     }
     val logical = StructType(fields)
-    val phys = fields.map(f =>
-      f.name -> f.metadata.getString("delta.columnMapping.physicalName")).toMap
+    val phys = physNameMap(logical, "name", "writeDeltaMapped")
     val dfPhys = df.select(df.columns.map(c => df.col(c).as(phys(c))).toIndexedSeq: _*)
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val pcJson = partitionBy.map(om.writeValueAsString).mkString("[", ",", "]")
@@ -1864,7 +1979,7 @@ object LakeWriter {
       if (cmRw.isEmpty) """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}"""
       else {
         val rfj = ("columnMapping" +: cmRw).sorted.map(om.writeValueAsString).mkString("[", ",", "]")
-        val wfj = (Seq("appendOnly", "invariants", "columnMapping") ++ cmRw).sorted
+        val wfj = (ImpliedWriterFeatures ++ Seq("columnMapping") ++ cmRw).sorted
           .map(om.writeValueAsString).mkString("[", ",", "]")
         s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":$rfj,"writerFeatures":$wfj}}"""
       }
@@ -1949,8 +2064,8 @@ object LakeWriter {
     * columns the table doesn't have yet are ADDED (appended after the
     * existing fields, forced nullable — pre-evolution files simply
     * lack them, and the schema-first scan reads those as null, which
-    * is the protocol's evolution model); since r16 this includes
-    * NESTED additions — a new field inside an existing struct (directly
+    * is the protocol's evolution model), NESTED additions included
+    * — a new field inside an existing struct (directly
     * or through an array element) appends after that struct's fields,
     * and old files null-fill it on read; table columns missing from
     * `df` fill with nulls when the table declares them nullable
@@ -1965,7 +2080,7 @@ object LakeWriter {
     * Refusals: type changes on existing columns (this writer does not
     * rewrite old files), dropping into a non-nullable hole, partition
     * columns missing from `df`, and the same writer-obligation gates
-    * as [[appendDelta]]. Column-mapped tables (name AND id mode, r16)
+    * as [[appendDelta]]. Column-mapped tables (name AND id mode)
     * evolve like unmapped ones: each new field gets a fresh physical
     * name + field id and `maxColumnId` advances ([[evolveSchema]]);
     * the grew-path batch stages through [[stagePhysicalRows]], so
@@ -2180,32 +2295,17 @@ object LakeWriter {
   def appendDeltaEvolve(df0: DataFrame, dir: String, checkpointInterval: Int = 0,
                         txn: Option[(String, Long)] = None): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
-    import org.apache.spark.sql.types.StructType
     val spark = df0.sparkSession
     val snap = DeltaReader.snapshot(spark, dir, None)
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"appendDeltaEvolve: unknown column mapping mode '$cm'")
-    val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[StructType]
+    val cm = writeGate(snap, "appendDeltaEvolve", removesRows = false, RowTracking.safeExtra(snap))
+    val table = tableSchema(snap)
     val tableNames = table.fieldNames.toSet
-    // the same obligation gates as appendDeltaWithSnapshot — evolution
-    // is still an append, and the table's declared constraints bind it
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "checkConstraints", "generatedColumns", "changeDataFeed", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 2 || (snap.minWriter >= 3 && snap.minWriter <= 5) ||
-        (snap.minWriter == 7 && unsafe.isEmpty),
-      s"appendDeltaEvolve: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing")
     // obligations enforce on the PRE-alignment batch: omitted generated
     // columns compute from their expressions (not null-fill), provided
     // ones verify, constraints/invariants check in one pass
     val df = enforceObligations(df0, snap, table, "appendDeltaEvolve")
 
-    // new columns — TOP-LEVEL and NESTED (r16) — append after their
+    // new columns — TOP-LEVEL and NESTED — append after their
     // parent's existing fields, forced nullable; CM gets fresh
     // physical names/ids at every level ([[evolveSchema]])
     val dfByName = df.schema.fields.map(f => f.name -> f).toMap
@@ -2308,22 +2408,8 @@ object LakeWriter {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not}
     val spark = df0.sparkSession
     val snap = DeltaReader.snapshot(spark, dir, None)
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"overwriteWhere: unknown column mapping mode '$cm'")
-    require(snap.configuration.getOrElse("delta.appendOnly", "false") != "true",
-      "overwriteWhere: table declares delta.appendOnly=true — a replace removes " +
-        "rows; forbidden on it")
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"overwriteWhere: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a rewrite whose obligations this writer cannot honor")
-    val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val cm = writeGate(snap, "overwriteWhere", removesRows = true, RowTracking.safeExtra(snap))
+    val table = tableSchema(snap)
     val df = enforceObligations(
       IdentityColumns.complete(df0, table, "overwriteWhere"), snap, table,
       "overwriteWhere")
@@ -2354,12 +2440,7 @@ object LakeWriter {
     val lineage = DeltaReader.scanFiles(spark, dir, snap, candidates, keepLineage = true)
     val matchedPaths = lineage.where(pred).select("__dv_path").distinct()
       .collect().map(_.getString(0)).toSet
-    def absPath(a: DeltaReader.AddFile): String =
-      fs.makeQualified(DeltaReader.resolveAddPath(root, a.path)).toUri.getPath
-    val affected = snap.active.filter(a => matchedPaths.contains(absPath(a)))
-    require(affected.size == matchedPaths.size,
-      s"overwriteWhere: resolved ${affected.size} of ${matchedPaths.size} matched " +
-        "files back to log entries — path normalization bug, refusing to commit")
+    val affected = affectedFiles(fs, root, snap, matchedPaths, "overwriteWhere")
 
     // CDF tables read the affected files again for the deleted-rows
     // change data — persist the scan so they are read once (lazy, no
@@ -2374,14 +2455,7 @@ object LakeWriter {
       if (affected.isEmpty) null
       else affScanOw.where(not(coalesce(pred, lit(false))))
     val replaced = Option(survivors).map(_.unionByName(df)).getOrElse(df)
-    val phys: Map[String, String] =
-      if (cm == "none") Map.empty
-      else table.fields.map { f =>
-        require(f.metadata.contains("delta.columnMapping.physicalName"),
-          s"overwriteWhere: column mapping is '$cm' but field '${f.name}' carries " +
-            "no physicalName metadata — malformed schemaString")
-        f.name -> f.metadata.getString("delta.columnMapping.physicalName")
-      }.toMap
+    val phys = physNameMap(table, cm, "overwriteWhere")
     val staged = stagePhysicalRows(replaced, table, cm, phys, "overwriteWhere")
     val stagePartCols = snap.partCols.map(c => phys.getOrElse(c, c))
     val cdcActions =
@@ -2454,22 +2528,8 @@ object LakeWriter {
     import org.apache.spark.sql.functions.lit
     val spark = df0.sparkSession
     val snap = DeltaReader.snapshot(spark, dir, None)
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"overwriteDelta: unknown column mapping mode '$cm'")
-    require(snap.configuration.getOrElse("delta.appendOnly", "false") != "true",
-      "overwriteDelta: table declares delta.appendOnly=true — an overwrite removes " +
-        "every existing row; forbidden on it")
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"overwriteDelta: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a rewrite whose obligations this writer cannot honor")
-    val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val cm = writeGate(snap, "overwriteDelta", removesRows = true, RowTracking.safeExtra(snap))
+    val table = tableSchema(snap)
     val df = enforceObligations(
       IdentityColumns.complete(df0, table, "overwriteDelta"), snap, table,
       "overwriteDelta")
@@ -2484,14 +2544,7 @@ object LakeWriter {
         s"overwriteDelta: column '${a.name}' may carry nulls but the table declares " +
           "it non-nullable")
     }
-    val phys: Map[String, String] =
-      if (cm == "none") Map.empty
-      else table.fields.map { f =>
-        require(f.metadata.contains("delta.columnMapping.physicalName"),
-          s"overwriteDelta: column mapping is '$cm' but field '${f.name}' carries no " +
-            "physicalName metadata — malformed schemaString")
-        f.name -> f.metadata.getString("delta.columnMapping.physicalName")
-      }.toMap
+    val phys = physNameMap(table, cm, "overwriteDelta")
     val staged = stagePhysicalRows(df, table, cm, phys, "overwriteDelta")
     val stagePartCols = snap.partCols.map(c => phys.getOrElse(c, c))
     val cdcActions =
@@ -2580,6 +2633,21 @@ object LakeWriter {
     }
   }
 
+  /** Logical→physical column-name map for a column-mapped table; empty
+    * when `cm` is "none". Refuses loudly — naming the op and the
+    * field — on a malformed schemaString whose field lacks
+    * physicalName metadata, instead of a bare NoSuchElementException.
+    */
+  private[graft] def physNameMap(table: org.apache.spark.sql.types.StructType,
+                                 cm: String, op: String): Map[String, String] =
+    if (cm == "none") Map.empty
+    else table.fields.map { f =>
+      require(f.metadata.contains("delta.columnMapping.physicalName"),
+        s"$op: column mapping is '$cm' but field '${f.name}' carries no " +
+          "delta.columnMapping.physicalName metadata — malformed schemaString")
+      f.name -> f.metadata.getString("delta.columnMapping.physicalName")
+    }.toMap
+
   /** ENFORCE the table's declared write obligations on a batch of new
     * values — the writer-protocol duties real delta-spark performs
     * instead of refusing: CHECK constraints (`delta.constraints.*` in
@@ -2593,21 +2661,6 @@ object LakeWriter {
     * the caller's batch. Returns the batch with generated columns
     * completed, in table column order when completion happened.
     */
-  /** Logical→physical column-name map for a name-mode table; empty
-    * when `cm` is "none". Refuses loudly — naming the op and the
-    * field — on a malformed schemaString whose field lacks
-    * physicalName metadata, instead of a bare NoSuchElementException.
-    */
-  private[graft] def physNameMap(table: org.apache.spark.sql.types.StructType,
-                                 cm: String, op: String): Map[String, String] =
-    if (cm == "none") Map.empty
-    else table.fields.map { f =>
-      require(f.metadata.contains("delta.columnMapping.physicalName"),
-        s"$op: field '${f.name}' carries no delta.columnMapping.physicalName " +
-          "metadata — malformed schemaString for a name-mode table")
-      f.name -> f.metadata.getString("delta.columnMapping.physicalName")
-    }.toMap
-
   private[graft] def enforceObligations(df: DataFrame, snap: DeltaReader.Snapshot,
                                         table: org.apache.spark.sql.types.StructType,
                                         op: String): DataFrame = {
@@ -2804,27 +2857,8 @@ object LakeWriter {
                                              snap: DeltaReader.Snapshot,
                                              operation: String = "WRITE",
                                              operationParameters: String = "{}"): Unit = {
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"appendDelta: unknown column mapping mode '$cm'")
-    // deletionVectors is append-safe: the writer obligation it imposes
-    // (respect + rewrite DVs when modifying files) only binds writes
-    // that TOUCH existing files, and a pure append never does.
-    // columnMapping is append-safe because the physical rename below
-    // stages parquet in the table's physical names. checkConstraints /
-    // generatedColumns / invariants are ENFORCED below, not refused.
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "checkConstraints", "generatedColumns", "changeDataFeed", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 2 || (snap.minWriter >= 3 && snap.minWriter <= 5) ||
-        (snap.minWriter == 7 && unsafe.isEmpty),
-      s"appendDelta: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — this writer implements version 2 (append semantics) and cannot " +
-        "enforce the table's declared constraints; refusing to write")
-    val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val cm = writeGate(snap, "appendDelta", removesRows = false, RowTracking.safeExtra(snap))
+    val table = tableSchema(snap)
     // the table's declared write obligations — CHECK constraints
     // (configuration), column invariants (field metadata), generated
     // columns (computed when omitted, verified when provided) — are
@@ -2851,14 +2885,7 @@ object LakeWriter {
     // column-mapped table the STAGED data and partition directories
     // carry the physical names (what the table's readers resolve);
     // the logical→physical projection is metadata-only.
-    val physByLogical: Map[String, String] =
-      if (cm == "none") Map.empty
-      else table.fields.map { f =>
-        require(f.metadata.contains("delta.columnMapping.physicalName"),
-          s"appendDelta: column mapping is '$cm' but field '${f.name}' carries no " +
-            "physicalName metadata — malformed schemaString")
-        f.name -> f.metadata.getString("delta.columnMapping.physicalName")
-      }.toMap
+    val physByLogical = physNameMap(table, cm, "appendDelta")
     val (staged, stagePartCols) =
       (stagePhysicalRows(df, table, cm, physByLogical, "appendDelta"),
         snap.partCols.map(c => physByLogical.getOrElse(c, c)))
@@ -3103,7 +3130,7 @@ object LakeWriter {
             "be a malformed table — declare one via delta.feature.<name>=supported " +
             "or use a schema that requires one")
         if (v7Features.nonEmpty || reqMinWriter.contains(7)) {
-          val wf = (Seq("appendOnly", "invariants") ++ v7Features ++
+          val wf = (ImpliedWriterFeatures ++ v7Features ++
             (if (cdfCreate) Seq("changeDataFeed") else Nil) ++
             (if (constraintsCreate) Seq("checkConstraints") else Nil))
             .distinct.sorted
@@ -3534,30 +3561,18 @@ object LakeWriter {
   /** autoCompact's trigger: when any partition holds >= minNumFiles
     * files under target/2, fold exactly the small files
     * ([[compactDelta]] with the `smallerThan` candidate filter — cost
-    * ∝ debt, converged partitions untouched). Tables whose column
-    * mapping or writer features compactDelta would refuse skip
-    * silently: the APPEND already committed, and failing it
-    * retroactively for optional maintenance would be a lie.
+    * ∝ debt, converged partitions untouched). Tables [[compactDelta]]'s
+    * write gate would refuse skip silently: the APPEND already
+    * committed, and failing it retroactively for optional maintenance
+    * would be a lie.
     */
   private def autoCompactMaybe(spark: SparkSession, dir: String,
                                conf: Map[String, String]): Unit = {
     val target = targetFileSizeOf(conf)
     val minN = spark.conf.get("spark.graft.delta.autoCompact.minNumFiles", "32").toInt
     val snap = DeltaReader.snapshot(spark, dir, None)
-    // column-mapped tables auto-compact too (r16 — compactDelta
-    // re-stages physical names/ids since r15, and composes them with
-    // row tracking's materialized columns since r16, so the old
-    // blanket CM skip would silently accumulate small-file debt the
-    // code can clear); only unknown modes skip
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    if (cm != "none" && cm != "name" && cm != "id") return
-    val rt = RowTracking.preservedProfileReady(snap)
-    val safe = Set("appendOnly", "invariants", "checkConstraints",
-      "generatedColumns", "changeDataFeed", "deletionVectors", "columnMapping", "typeWidening",
-      "variantType", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++ Clustering.Features ++
-      (if (rt) RowTracking.Features else Set.empty[String])
-    if (snap.minWriter > 5 &&
-      !(snap.minWriter == 7 && snap.writerFeatures.forall(safe))) return
+    if (writeRefusal(snap, "compactDelta", removesRows = false,
+        RowTracking.preservedExtra(snap)).isDefined) return
     val debt = snap.active.filter(_.size < target / 2).groupBy(_.partitionValues)
     if (debt.values.exists(_.size >= minN))
       compactDelta(spark, dir, minFiles = minN, targetFileBytes = target,
@@ -3726,9 +3741,7 @@ object LakeWriter {
     require(bad.isEmpty,
       s"$op: WHERE may reference only partition columns (${snap.partCols.mkString(", ")})" +
         s"; got ${bad.mkString(", ")}")
-    val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[StructType]
-    val typeFor = table.fields.map(f => f.name -> f.dataType).toMap
+    val typeFor = tableSchema(snap).fields.map(f => f.name -> f.dataType).toMap
     val keys = files.map(_.partitionValues).distinct.zipWithIndex
     val schema = StructType(StructField("__i", IntegerType) +:
       snap.partCols.map(c => StructField(c, StringType)))
@@ -3754,50 +3767,13 @@ object LakeWriter {
     require(targetFileBytes > 0, s"compactDelta: targetFileBytes $targetFileBytes")
     // snapOverride = OCC test seam (appendDeltaWithSnapshot's pattern)
     val snap = snapOverride.getOrElse(DeltaReader.snapshot(spark, dir, None))
-    // column-mapped tables compact too (r15): the fold re-stages its
-    // LIVE rows through stagePhysicalRows, so rewritten files carry
-    // the physical names (and, in id mode, the parquet field ids) the
-    // table's readers resolve — OPTIMIZE debt on a mapped 100-TB
-    // table would otherwise be permanent
-    val cmMode = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cmMode == "none" || cmMode == "name" || cmMode == "id",
-      s"compactDelta: unknown column mapping mode '$cmMode'")
-    // writer-version/feature gate: a dataChange=false rewrite re-states
-    // EXISTING rows only, so every legacy obligation through writer v5
-    // holds by construction — CHECK constraints and invariants already
-    // passed on these rows, generated columns copy through, CDF readers
-    // skip dataChange=false commits entirely (the protocol's OPTIMIZE
-    // carve-out — no change files needed), and column mapping is
-    // honored by physical re-staging. v7 tables must declare only features this
-    // rewrite preserves (rowTracking, e.g., would need baseRowId on
-    // every add — refused). deletionVectors is honored, not refused:
-    // the fold below reads through the DV-applied scan, so a compacted
-    // file holds exactly its sources' LIVE rows and the descriptors are
-    // dropped with the removes — compaction IS the physical cleanup
-    // path for a table that accumulated deleteWhereDv debt.
-    //
-    // PRESERVED row-tracking profile: a tracked table with an
-    // established watermark AND configured materialized-column names
-    // can compact — the rewrite stores every surviving row's identity
-    // in the materialized physical columns (readers prefer them over
-    // the new files' fresh baseRowId + index), so ids survive the
-    // layout change. Tracked tables missing the materialized-name
-    // configs (enabled by an older writer) still refuse.
+    // the fold re-stages live rows through stagePhysicalRows, so
+    // column-mapped tables compact too; on a row-tracked table the
+    // materialized id columns (storage-level names the logical schema
+    // never carries) ride that staging as pass-through extras
+    val cmMode = writeGate(snap, "compactDelta", removesRows = false,
+      RowTracking.preservedExtra(snap))
     val rt = RowTracking.preservedProfileReady(snap)
-    // preserved-profile row tracking + column mapping COMPOSE (r16):
-    // the materialized id columns are storage-level physical names the
-    // logical schema never carries, so they ride the physical staging
-    // as pass-through extras while the table columns rename/attach ids
-    val compactSafe = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "checkConstraints",
-      "generatedColumns", "changeDataFeed", "deletionVectors", "columnMapping", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++
-      (if (rt) RowTracking.Features else Set.empty[String])
-    val compactUnsafe = snap.writerFeatures.filterNot(compactSafe)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && compactUnsafe.isEmpty),
-      s"compactDelta: table requires writer version ${snap.minWriter}" +
-        (if (compactUnsafe.nonEmpty) s" with features ${compactUnsafe.mkString(", ")}" else "") +
-        " — this writer implements version 2 semantics and cannot honor the " +
-        "table's declared writer requirements; refusing to rewrite")
     val hconf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(hconf)
@@ -3821,8 +3797,7 @@ object LakeWriter {
       s"_compact_${snap.version + 1}_${java.util.UUID.randomUUID().toString.take(8)}")
     val matCols = if (rt) RowTracking.materializedCols(snap) else None
     matCols.foreach { case (idc, vc) =>
-      val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val table = tableSchema(snap)
       Seq(idc, vc).foreach(c => require(!table.fieldNames.contains(c),
         s"compactDelta: materialized row-id column name '$c' collides with a " +
           "table column — repair the table configuration"))
@@ -4252,24 +4227,7 @@ object LakeWriter {
   private[graft] def deleteWhereWithSnapshot(spark: SparkSession, dir: String,
       predicate: String, snap: DeltaReader.Snapshot): Seq[String] = {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not}
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"deleteWhere: unknown column mapping mode '$cm'")
-    require(snap.configuration.getOrElse("delta.appendOnly", "false") != "true",
-      "deleteWhere: table declares delta.appendOnly=true — deletes are forbidden on it")
-    // same shape as the append gate: legacy writer versions pass when
-    // none of their non-delete obligations is declared (CHECK
-    // constraints and generated columns cannot be VIOLATED by removing
-    // rows, so only CDF — gated above — blocks legacy tables); v7
-    // tables must declare only features this rewrite preserves
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"deleteWhere: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a rewrite whose obligations this writer cannot honor")
+    val cm = writeGate(snap, "deleteWhere", removesRows = true, RowTracking.safeExtra(snap))
 
     val hconf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
@@ -4286,13 +4244,7 @@ object LakeWriter {
     val matchedPaths = lineage.where(pred).select("__dv_path").distinct()
       .collect().map(_.getString(0)).toSet
     if (matchedPaths.isEmpty) return Nil
-
-    def absPath(a: DeltaReader.AddFile): String =
-      fs.makeQualified(DeltaReader.resolveAddPath(root, a.path)).toUri.getPath
-    val affected = snap.active.filter(a => matchedPaths.contains(absPath(a)))
-    require(affected.size == matchedPaths.size,
-      s"deleteWhere: resolved ${affected.size} of ${matchedPaths.size} matched files " +
-        "back to log entries — path normalization bug, refusing to commit")
+    val affected = affectedFiles(fs, root, snap, matchedPaths, "deleteWhere")
 
     // job 2: rewrite ONLY the affected files' surviving rows (their
     // DVs already applied by the scan). NULL-predicate rows survive.
@@ -4303,16 +4255,8 @@ object LakeWriter {
     val affScan0 = DeltaReader.scanFiles(spark, dir, snap, affected)
     val affScan = if (cdfEnabled(snap)) affScan0.persist() else affScan0
     val survivors = affScan.where(not(coalesce(pred, lit(false))))
-    val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val phys: Map[String, String] =
-      if (cm == "none") Map.empty
-      else table.fields.map { f =>
-        require(f.metadata.contains("delta.columnMapping.physicalName"),
-          s"deleteWhere: column mapping is '$cm' but field '${f.name}' carries no " +
-            "physicalName metadata — malformed schemaString")
-        f.name -> f.metadata.getString("delta.columnMapping.physicalName")
-      }.toMap
+    val table = tableSchema(snap)
+    val phys = physNameMap(table, cm, "deleteWhere")
     val staged = stagePhysicalRows(survivors, table, cm, phys, "deleteWhere")
     val stagePartCols = snap.partCols.map(c => phys.getOrElse(c, c))
     // CDF: the deleted rows ARE the commit's change data — staged to
@@ -4340,57 +4284,6 @@ object LakeWriter {
     affected.map(_.path).sorted
   }
 
-  /** DELETE rows matching `predicate` by writing DELETION VECTORS
-    * instead of rewriting files — the merge-on-read path PROTOCOL.md's
-    * `deletionVectors` feature exists for. [[deleteWhere]] (copy-on-
-    * write) re-stages every surviving row of every affected file: on a
-    * 100-TB table a targeted deletion (one user's rows, a bad crawl
-    * batch) rewrites terabytes to remove kilobytes. This operator's
-    * write cost is ∝ DELETED rows: each affected file keeps its bytes
-    * and gains a roaring-bitmap descriptor; one shared sidecar `.bin`
-    * (the reader's own verified format: version byte 1, per-DV
-    * big-endian size + bitmap + CRC-32) lands at the table root and
-    * the commit re-adds the files with their descriptors (remove+add
-    * of the same path in one commit — the add wins, the protocol's DV
-    * rewrite shape).
-    *
-    * Protocol: a table not yet declaring the feature is upgraded
-    * IN-COMMIT to (3,7) with `deletionVectors` added and the legacy
-    * writer obligations the table actually declares made explicit
-    * (appendOnly/invariants always — they are implied by writer v2 —
-    * plus checkConstraints/generatedColumns only when present, so the
-    * feature list never claims obligations the table doesn't have).
-    * Readers without DV support then refuse loudly instead of
-    * resurrecting deleted rows — exactly the protocol's intent.
-    *
-    * Semantics match [[deleteWhere]]: SQL null predicate rows survive,
-    * a no-match predicate writes NO commit (and no sidecar), already-
-    * deleted rows stay deleted (the new bitmap is the union of the
-    * file's existing DV and the new matches — the lineage scan is
-    * post-DV, so the two sets are disjoint by construction), time
-    * travel below the delete sees the old rows, and
-    * [[graft.streaming.DeltaTail]] refuses the version (dataChange
-    * removes). Column-mapped (name mode) tables work: the predicate
-    * binds to LOGICAL names through the scan, descriptors are
-    * path-keyed. A fully-deleted file keeps its (all-rows) DV rather
-    * than being dropped — without per-file row counts the writer
-    * cannot prove cardinality == numRecords, and a zero-live-row scan
-    * is correct either way. The maintenance ops compose: [[checkpointDelta]]
-    * re-emits descriptors, [[compactDelta]] folds DV'd files through
-    * the DV-applied scan (dropping the vectors — the physical-cleanup
-    * path once DV debt accumulates), and [[vacuumDelta]] keeps exactly
-    * the sidecars some window version still references.
-    *
-    * Scale: two distributed jobs (find matches, build AND WRITE
-    * bitmaps — both executor-side; [[writeDvSidecars]] authors the
-    * sidecar files from the executors, so no bitmap bytes ever land
-    * on the driver). Driver state is O(affected files) descriptors
-    * only — a mass scattered delete is driver-safe here; the
-    * copy-on-write [[deleteWhere]] remains the physical-cleanup
-    * choice when most of a file dies anyway. Returns the affected
-    * file paths as stored in the log, sorted; empty = nothing
-    * matched.
-    */
   /** The (3,7) deletionVectors protocol restatement a DV commit must
     * carry on a table not yet declaring the feature — legacy writer
     * obligations the table ACTUALLY declares made explicit, never a
@@ -4404,23 +4297,32 @@ object LakeWriter {
       snap.minWriter == 7 && snap.writerFeatures.contains("deletionVectors")
     if (declared) None
     else {
-      val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val legacy = scala.collection.mutable.Set("appendOnly", "invariants")
-      if (snap.minWriter >= 3 &&
-          snap.configuration.keys.exists(_.startsWith("delta.constraints.")))
-        legacy += "checkConstraints"
-      if (snap.minWriter >= 4 &&
-          table.fields.exists(_.metadata.contains("delta.generationExpression")))
-        legacy += "generatedColumns"
-      if (cdfEnabled(snap)) legacy += "changeDataFeed"
-      // BOTH mapping modes are reader-visible obligations the (3,7)
-      // restatement must carry explicitly — id mode included
-      if (cm != "none") legacy += "columnMapping"
       val rf = snap.readerFeatures.toSet ++
         (if (cm != "none") Set("columnMapping") else Set.empty) + "deletionVectors"
-      val wf = snap.writerFeatures.toSet ++ legacy + "deletionVectors"
+      val wf = snap.writerFeatures.toSet ++ versionedObligations(snap, cm) + "deletionVectors"
       Some(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${jarr(rf)},"writerFeatures":${jarr(wf)}}}""")
+    }
+  }
+
+  /** A DV commit's file actions: every affected file removed, then
+    * re-added in path order with its new descriptor from `placed`
+    * (keyed by [[absPath]]) — the add wins, the protocol's DV rewrite
+    * shape. Stats, row ids and the clustering provider carry through.
+    */
+  private def dvReadds(fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
+                       affected: Seq[DeltaReader.AddFile],
+                       placed: Map[String, DvPlacement]): Seq[String] = {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val ordered = affected.sortBy(_.path)
+    ordered.map { a =>
+      s"""{"remove":{"path":${om.writeValueAsString(a.path)},"deletionTimestamp":0,"size":${a.size},"dataChange":true}}"""
+    } ++ ordered.map { a =>
+      val pl = placed(absPath(fs, root, a))
+      val pvJson = a.partitionValues.map { case (c0, v) =>
+        s"${om.writeValueAsString(c0)}:${if (v == null) "null" else om.writeValueAsString(v)}"
+      }.mkString("{", ",", "}")
+      val statsJson = a.stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
+      s"""{"add":{"path":${om.writeValueAsString(a.path)},"partitionValues":$pvJson,"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":${om.writeValueAsString(pl.uuidEnc)},"offset":${pl.offset},"sizeInBytes":${pl.sizeInBytes},"cardinality":${pl.cardinality}}$statsJson${RowTracking.carryJson(a)}${clpCarry(a)}}}"""
     }
   }
 
@@ -4516,22 +4418,61 @@ object LakeWriter {
     }.toMap
   }
 
+  /** DELETE rows matching `predicate` by writing DELETION VECTORS
+    * instead of rewriting files — the merge-on-read path PROTOCOL.md's
+    * `deletionVectors` feature exists for. [[deleteWhere]] (copy-on-
+    * write) re-stages every surviving row of every affected file: on a
+    * 100-TB table a targeted deletion (one user's rows, a bad crawl
+    * batch) rewrites terabytes to remove kilobytes. This operator's
+    * write cost is ∝ DELETED rows: each affected file keeps its bytes
+    * and gains a roaring-bitmap descriptor; one shared sidecar `.bin`
+    * (the reader's own verified format: version byte 1, per-DV
+    * big-endian size + bitmap + CRC-32) lands at the table root and
+    * the commit re-adds the files with their descriptors (remove+add
+    * of the same path in one commit — the add wins, the protocol's DV
+    * rewrite shape).
+    *
+    * Protocol: a table not yet declaring the feature is upgraded
+    * IN-COMMIT to (3,7) with `deletionVectors` added and the legacy
+    * writer obligations the table actually declares made explicit
+    * (appendOnly/invariants always — they are implied by writer v2 —
+    * plus checkConstraints/generatedColumns only when present, so the
+    * feature list never claims obligations the table doesn't have).
+    * Readers without DV support then refuse loudly instead of
+    * resurrecting deleted rows — exactly the protocol's intent.
+    *
+    * Semantics match [[deleteWhere]]: SQL null predicate rows survive,
+    * a no-match predicate writes NO commit (and no sidecar), already-
+    * deleted rows stay deleted (the new bitmap is the union of the
+    * file's existing DV and the new matches — the lineage scan is
+    * post-DV, so the two sets are disjoint by construction), time
+    * travel below the delete sees the old rows, and
+    * [[graft.streaming.DeltaTail]] refuses the version (dataChange
+    * removes). Column-mapped (name mode) tables work: the predicate
+    * binds to LOGICAL names through the scan, descriptors are
+    * path-keyed. A fully-deleted file keeps its (all-rows) DV rather
+    * than being dropped — without per-file row counts the writer
+    * cannot prove cardinality == numRecords, and a zero-live-row scan
+    * is correct either way. The maintenance ops compose: [[checkpointDelta]]
+    * re-emits descriptors, [[compactDelta]] folds DV'd files through
+    * the DV-applied scan (dropping the vectors — the physical-cleanup
+    * path once DV debt accumulates), and [[vacuumDelta]] keeps exactly
+    * the sidecars some window version still references.
+    *
+    * Scale: two distributed jobs (find matches, build AND WRITE
+    * bitmaps — both executor-side; [[writeDvSidecars]] authors the
+    * sidecar files from the executors, so no bitmap bytes ever land
+    * on the driver). Driver state is O(affected files) descriptors
+    * only — a mass scattered delete is driver-safe here; the
+    * copy-on-write [[deleteWhere]] remains the physical-cleanup
+    * choice when most of a file dies anyway. Returns the affected
+    * file paths as stored in the log, sorted; empty = nothing
+    * matched.
+    */
   def deleteWhereDv(spark: SparkSession, dir: String, predicate: String): Seq[String] = {
     import org.apache.spark.sql.functions.{col, expr}
     val snap = DeltaReader.snapshot(spark, dir, None)
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"deleteWhereDv: unknown column mapping mode '$cm'")
-    require(snap.configuration.getOrElse("delta.appendOnly", "false") != "true",
-      "deleteWhereDv: table declares delta.appendOnly=true — deletes are forbidden on it")
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"deleteWhereDv: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a mutation whose obligations this writer cannot honor")
+    val cm = writeGate(snap, "deleteWhereDv", removesRows = true, RowTracking.safeExtra(snap))
 
     val hconf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
@@ -4556,8 +4497,7 @@ object LakeWriter {
     val cdcActions =
       if (!cdfEnabled(snap)) Nil
       else {
-        val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
+        val table = tableSchema(snap)
         val phys = physNameMap(table, cm, "deleteWhereDv")
         val logCdc = matchedRows.select((table.fieldNames.map { c =>
           matchedRows.col(c)
@@ -4566,12 +4506,7 @@ object LakeWriter {
           dir, snap.version + 1, snap.partCols.map(c => phys.getOrElse(c, c)))
       }
 
-    def absPath(a: DeltaReader.AddFile): String =
-      fs.makeQualified(DeltaReader.resolveAddPath(root, a.path)).toUri.getPath
-    val affected = snap.active.filter(a => matchedPaths.contains(absPath(a)))
-    require(affected.size == matchedPaths.size,
-      s"deleteWhereDv: resolved ${affected.size} of ${matchedPaths.size} matched files " +
-        "back to log entries — path normalization bug, refusing to commit")
+    val affected = affectedFiles(fs, root, snap, matchedPaths, "deleteWhereDv")
 
     // job 2: per-file bitmap = new matches ∪ the file's existing DV
     // rows (a descriptor REPLACES its predecessor, so dropping the old
@@ -4583,22 +4518,10 @@ object LakeWriter {
       else matched.unionByName(DeltaReader.deletedRowsDf(spark, root, fs, withDv))
     val placed = writeDvSidecars(spark, root, allDel)
 
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
     actions += s"""{"commitInfo":{"timestamp":0,"operation":"DELETE","operationParameters":{},"readVersion":${snap.version},"engineInfo":"graft"}}"""
     dvFeatureUpgrade(snap, cm).foreach(actions += _)
-    val ordered = affected.sortBy(_.path)
-    ordered.foreach { a =>
-      actions += s"""{"remove":{"path":${om.writeValueAsString(a.path)},"deletionTimestamp":0,"size":${a.size},"dataChange":true}}"""
-    }
-    ordered.foreach { a =>
-      val pl = placed(absPath(a))
-      val pvJson = a.partitionValues.map { case (c0, v) =>
-        s"${om.writeValueAsString(c0)}:${if (v == null) "null" else om.writeValueAsString(v)}"
-      }.mkString("{", ",", "}")
-      val statsJson = a.stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
-      actions += s"""{"add":{"path":${om.writeValueAsString(a.path)},"partitionValues":$pvJson,"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":${om.writeValueAsString(pl.uuidEnc)},"offset":${pl.offset},"sizeInBytes":${pl.sizeInBytes},"cardinality":${pl.cardinality}}$statsJson${RowTracking.carryJson(a)}${clpCarry(a)}}}"""
-    }
+    actions ++= dvReadds(fs, root, affected, placed)
     actions ++= cdcActions
     val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
     fs.mkdirs(log)
@@ -4649,24 +4572,9 @@ object LakeWriter {
     import org.apache.spark.sql.functions.{col, expr, lit}
     require(set.nonEmpty, "updateWhereDv: empty SET clause")
     val snap = DeltaReader.snapshot(spark, dir, None)
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"updateWhereDv: unknown column mapping mode '$cm'")
-    require(snap.configuration.getOrElse("delta.appendOnly", "false") != "true",
-      "updateWhereDv: table declares delta.appendOnly=true — updates are forbidden")
-    // row tracking: refuses only the half-configured shape (tracking
-    // declared, watermark absent) — rowIdBase throws there
+    val cm = writeGate(snap, "updateWhereDv", removesRows = true, RowTracking.safeExtra(snap))
     val rowIdBase = RowTracking.rowIdBase(snap)
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"updateWhereDv: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a mutation whose obligations this writer cannot honor")
-    val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val table = tableSchema(snap)
     IdentityColumns.refuseUpdates(table, set.keySet, "updateWhereDv")
     val badCols = set.keySet -- table.fieldNames.toSet
     require(badCols.isEmpty,
@@ -4686,12 +4594,7 @@ object LakeWriter {
     val matchedPaths = matched.select("__dv_path").distinct()
       .collect().map(_.getString(0)).toSet
     if (matchedPaths.isEmpty) return Nil
-    def absPath(a: DeltaReader.AddFile): String =
-      fs.makeQualified(DeltaReader.resolveAddPath(root, a.path)).toUri.getPath
-    val affected = snap.active.filter(a => matchedPaths.contains(absPath(a)))
-    require(affected.size == matchedPaths.size,
-      s"updateWhereDv: resolved ${affected.size} of ${matchedPaths.size} matched " +
-        "files back to log entries — path normalization bug, refusing to commit")
+    val affected = affectedFiles(fs, root, snap, matchedPaths, "updateWhereDv")
 
     // the updated rows — SET over the pre-update values, obligations
     // verified, CM physical naming, declared partition layout
@@ -4788,18 +4691,7 @@ object LakeWriter {
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
     actions += s"""{"commitInfo":{"timestamp":0,"operation":"UPDATE","operationParameters":{},"readVersion":${snap.version},"engineInfo":"graft"}}"""
     dvFeatureUpgrade(snap, cm).foreach(actions += _)
-    val ordered = affected.sortBy(_.path)
-    ordered.foreach { a =>
-      actions += s"""{"remove":{"path":${om.writeValueAsString(a.path)},"deletionTimestamp":0,"size":${a.size},"dataChange":true}}"""
-    }
-    ordered.foreach { a =>
-      val pl = placed(absPath(a))
-      val pvJson = a.partitionValues.map { case (c0, v) =>
-        s"${om.writeValueAsString(c0)}:${if (v == null) "null" else om.writeValueAsString(v)}"
-      }.mkString("{", ",", "}")
-      val statsJson = a.stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
-      actions += s"""{"add":{"path":${om.writeValueAsString(a.path)},"partitionValues":$pvJson,"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":${om.writeValueAsString(pl.uuidEnc)},"offset":${pl.offset},"sizeInBytes":${pl.sizeInBytes},"cardinality":${pl.cardinality}}$statsJson${RowTracking.carryJson(a)}${clpCarry(a)}}}"""
-    }
+    actions ++= dvReadds(fs, root, affected, placed)
     actions ++= newAdds
     // consumed ids → advance the watermark in the SAME atomic commit
     rowIdBase.foreach { base =>
@@ -4850,24 +4742,9 @@ object LakeWriter {
     require(changes.columns.contains("_change_type"),
       "applyCdcDv: the batch must carry _change_type ('delete' or upsert)")
     val snap = DeltaReader.snapshot(spark, dir, None)
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"applyCdcDv: unknown column mapping mode '$cm'")
-    require(snap.configuration.getOrElse("delta.appendOnly", "false") != "true",
-      "applyCdcDv: table declares delta.appendOnly=true — CDC deletes are forbidden")
-    // row tracking: refuses only the half-configured shape (tracking
-    // declared, watermark absent) — rowIdBase throws there
+    val cm = writeGate(snap, "applyCdcDv", removesRows = true, RowTracking.safeExtra(snap))
     val rowIdBase = RowTracking.rowIdBase(snap)
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"applyCdcDv: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a mutation whose obligations this writer cannot honor")
-    val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val table = tableSchema(snap)
     val missing = table.fieldNames.filterNot(changes.columns.contains)
     require(missing.isEmpty,
       s"applyCdcDv: the batch lacks table columns ${missing.mkString(", ")}")
@@ -4904,12 +4781,7 @@ object LakeWriter {
     val matched = joined.select(col("__dv_path"), col("__dv_ridx"))
     val matchedPaths = matched.select("__dv_path").distinct()
       .collect().map(_.getString(0)).toSet
-    def absPath(a: DeltaReader.AddFile): String =
-      fs.makeQualified(DeltaReader.resolveAddPath(root, a.path)).toUri.getPath
-    val affected = snap.active.filter(a => matchedPaths.contains(absPath(a)))
-    require(affected.size == matchedPaths.size,
-      s"applyCdcDv: resolved ${affected.size} of ${matchedPaths.size} matched files " +
-        "back to log entries — path normalization bug, refusing to commit")
+    val affected = affectedFiles(fs, root, snap, matchedPaths, "applyCdcDv")
 
     // the staged rows: updated versions of matched upserts + inserts
     // of unmatched non-deletes
@@ -5040,18 +4912,7 @@ object LakeWriter {
     txn.foreach { case (appId, v) =>
       actions += s"""{"txn":{"appId":${om.writeValueAsString(appId)},"version":$v}}"""
     }
-    val ordered = affected.sortBy(_.path)
-    ordered.foreach { a =>
-      actions += s"""{"remove":{"path":${om.writeValueAsString(a.path)},"deletionTimestamp":0,"size":${a.size},"dataChange":true}}"""
-    }
-    ordered.foreach { a =>
-      val pl = placed(absPath(a))
-      val pvJson = a.partitionValues.map { case (c0, v) =>
-        s"${om.writeValueAsString(c0)}:${if (v == null) "null" else om.writeValueAsString(v)}"
-      }.mkString("{", ",", "}")
-      val statsJson = a.stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
-      actions += s"""{"add":{"path":${om.writeValueAsString(a.path)},"partitionValues":$pvJson,"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":${om.writeValueAsString(pl.uuidEnc)},"offset":${pl.offset},"sizeInBytes":${pl.sizeInBytes},"cardinality":${pl.cardinality}}$statsJson${RowTracking.carryJson(a)}${clpCarry(a)}}}"""
-    }
+    actions ++= dvReadds(fs, root, affected, placed)
     actions ++= newAdds
     // consumed ids → advance the watermark in the SAME atomic commit
     rowIdBase.foreach { base =>
@@ -5079,9 +4940,8 @@ object LakeWriter {
     * loudly (each matched target row must have ONE governing source
     * row — the same ambiguity real MERGE rejects); duplicate keys in
     * the TARGET each get replaced, preserving their multiplicity.
-    * `source` must carry the table's logical schema. Same write gates
-    * as [[updateWhere]] (new values: constraints/invariants/generated
-    * columns refuse; appendOnly/CDF refuse). Returns the rewritten
+    * `source` must carry the table's logical schema. Same
+    * [[writeGate]] and obligation checks as [[updateWhere]]. Returns the rewritten
     * (removed) file paths, sorted — empty with a pure-insert commit is
     * normal when no key matched.
     *
@@ -5098,8 +4958,7 @@ object LakeWriter {
     // table's schema (the general engine below only requires key
     // columns + whatever the clauses reference)
     val snap = DeltaReader.snapshot(spark, dir, None)
-    val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val table = tableSchema(snap)
     require(source.schema.length == table.length,
       s"mergeInto: source has ${source.schema.length} columns, table has " +
         s"${table.length} (${table.fieldNames.mkString(", ")})")
@@ -5191,22 +5050,8 @@ object LakeWriter {
       }
     }
     val snap = DeltaReader.snapshot(spark, dir, None)
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"mergeIntoClauses: unknown column mapping mode '$cm'")
-    require(snap.configuration.getOrElse("delta.appendOnly", "false") != "true",
-      "mergeIntoClauses: table declares delta.appendOnly=true — merges rewrite rows; " +
-        "refusing")
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"mergeIntoClauses: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a rewrite whose obligations this writer cannot honor")
-    val table0 = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val cm = writeGate(snap, "mergeIntoClauses", removesRows = true, RowTracking.safeExtra(snap))
+    val table0 = tableSchema(snap)
     // WITH SCHEMA EVOLUTION: source columns the table lacks become new
     // (nullable) table columns in the SAME commit — target rows read
     // null for them, the merge's values land, and the commit restates
@@ -5321,8 +5166,6 @@ object LakeWriter {
     val hconf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(hconf)
-    def absPath(a: DeltaReader.AddFile): String =
-      fs.makeQualified(DeltaReader.resolveAddPath(root, a.path)).toUri.getPath
 
     val srcKeys = keyAgg.select(keyCols.map(col): _*)
     // BY SOURCE clauses inspect every live target row — the whole
@@ -5347,11 +5190,7 @@ object LakeWriter {
           keepLineage = true)
         val matchedPaths = lineage.join(srcKeys, keyCols, "left_semi")
           .select("__dv_path").distinct().collect().map(_.getString(0)).toSet
-        val got = snap.active.filter(a => matchedPaths.contains(absPath(a)))
-        require(got.size == matchedPaths.size,
-          s"mergeIntoClauses: resolved ${got.size} of ${matchedPaths.size} matched " +
-            "files back to log entries — path normalization bug, refusing to commit")
-        got
+        affectedFiles(fs, root, snap, matchedPaths, "mergeIntoClauses")
       }
     // a merge that touches no file and can insert nothing writes NO commit
     // source emptiness falls out of the fused aggregate when it ran
@@ -5588,21 +5427,8 @@ object LakeWriter {
       snap: DeltaReader.Snapshot): Seq[String] = {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
     require(set.nonEmpty, "updateWhere: empty SET clause")
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"updateWhere: unknown column mapping mode '$cm'")
-    require(snap.configuration.getOrElse("delta.appendOnly", "false") != "true",
-      "updateWhere: table declares delta.appendOnly=true — updates are forbidden on it")
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"updateWhere: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a rewrite whose obligations this writer cannot honor")
-    val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val cm = writeGate(snap, "updateWhere", removesRows = true, RowTracking.safeExtra(snap))
+    val table = tableSchema(snap)
     // CHECK constraints / invariants / generated columns are VERIFIED
     // on the updated rows before the commit (enforceObligations below)
     IdentityColumns.refuseUpdates(table, set.keySet, "updateWhere")
@@ -5621,13 +5447,7 @@ object LakeWriter {
     val matchedPaths = lineage.where(pred).select("__dv_path").distinct()
       .collect().map(_.getString(0)).toSet
     if (matchedPaths.isEmpty) return Nil
-
-    def absPath(a: DeltaReader.AddFile): String =
-      fs.makeQualified(DeltaReader.resolveAddPath(root, a.path)).toUri.getPath
-    val affected = snap.active.filter(a => matchedPaths.contains(absPath(a)))
-    require(affected.size == matchedPaths.size,
-      s"updateWhere: resolved ${affected.size} of ${matchedPaths.size} matched files " +
-        "back to log entries — path normalization bug, refusing to commit")
+    val affected = affectedFiles(fs, root, snap, matchedPaths, "updateWhere")
 
     // rewrite the affected files: matching rows get the SET expressions
     // (evaluated against the PRE-update row, all at once — a SET that
@@ -6029,10 +5849,7 @@ object LakeWriter {
     * at 100 TB this is the difference between a point lookup touching
     * a handful of files and touching all of them.
     *
-    * Same gates as [[compactDelta]] (column mapping refused; legacy
-    * writer obligations hold for a dataChange=false re-statement of
-    * existing rows; v7 tables must declare only preserved features).
-    * Deletion vectors fold through the DV-applied scan and drop, like
+    * Same [[writeGate]] as [[compactDelta]]. Deletion vectors fold through the DV-applied scan and drop, like
     * compaction. Quantile bounds come from ONE approximate pass over
     * the live table; the per-row z-value is a driver-broadcast bucket
     * lookup (the bounds array is 255 doubles — constant size at any
@@ -6068,8 +5885,7 @@ object LakeWriter {
     * physical names + field ids, row-tracked tables rewrite through
     * the preserved id profile — and the two COMPOSE (the materialized
     * identity columns ride through stagePhysicalRows as extras, same
-    * as compactDelta since r16), DVs fold through the applied scan
-    * and drop.
+    * as compactDelta), DVs fold through the applied scan and drop.
     */
   def compactDeltaCluster(spark: SparkSession, dir: String, cols: Seq[String],
                           filesPerPartition: Int = 8,
@@ -6087,28 +5903,12 @@ object LakeWriter {
     // commit from a deliberately stale snapshot to exercise the
     // maintenance-rebase tier deterministically
     val snap = snapOverride.getOrElse(DeltaReader.snapshot(spark, dir, None))
-    // column-mapped tables re-layout too (r16): the unioned rewrite
-    // re-stages through stagePhysicalRows below — same pattern as
-    // compactDelta's r15 change — so rewritten files carry physical
-    // names (and, in id mode, parquet field ids) readers resolve
-    val cmMode = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cmMode == "none" || cmMode == "name" || cmMode == "id",
-      s"$op: unknown column mapping mode '$cmMode'")
-    // the same PRESERVED row-tracking profile as compactDelta: ready
-    // tracked tables re-layout with every surviving id materialized;
-    // half-configured ones refuse
+    // the unioned rewrite re-stages through stagePhysicalRows below, as
+    // compactDelta's fold does, under the same preserved row-id profile
+    val cmMode = writeGate(snap, op, removesRows = false, RowTracking.preservedExtra(snap))
     val rt = RowTracking.preservedProfileReady(snap)
-    val compactSafe = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "checkConstraints",
-      "generatedColumns", "changeDataFeed", "deletionVectors", "columnMapping", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++
-      (if (rt) RowTracking.Features else Set.empty[String])
-    val compactUnsafe = snap.writerFeatures.filterNot(compactSafe)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && compactUnsafe.isEmpty),
-      s"$op: table requires writer version ${snap.minWriter}" +
-        (if (compactUnsafe.nonEmpty) s" with features ${compactUnsafe.mkString(", ")}" else "") +
-        " — refusing to rewrite")
     val matCols = if (rt) RowTracking.materializedCols(snap) else None
-    val table = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+    val table = tableSchema(snap)
     cols.foreach { c =>
       require(table.fieldNames.contains(c),
         s"$op: column '$c' not in ${table.fieldNames.mkString(", ")}")
@@ -6255,22 +6055,17 @@ object LakeWriter {
       if (!Clustering.isClustered(snap)) return
       actions += Clustering.domainAction(Nil)
     } else {
-      // column-mapped tables may declare clustering (r16): the
-      // clustered OPTIMIZE rewrite re-stages physical names/ids, so
-      // the declaration is maintainable; only unknown modes refuse
+      // column-mapped tables may declare clustering: the clustered
+      // OPTIMIZE rewrite re-stages physical names/ids, so the
+      // declaration is maintainable; only unknown modes refuse
       val cmC = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
       require(cmC == "none" || cmC == "name" || cmC == "id",
         s"clusterBy: unknown column mapping mode '$cmC'")
       Clustering.validate(table, snap.partCols, cols, "clusterBy")
       protocolWithWriterFeatures(snap, Clustering.Features).foreach(actions += _)
       // the domain stores PHYSICAL names (what the files' stats carry)
-      val phys = cols.map { c =>
-        val f = table(c)
-        if (f.metadata.contains("delta.columnMapping.physicalName"))
-          f.metadata.getString("delta.columnMapping.physicalName")
-        else c
-      }
-      actions += Clustering.domainAction(phys)
+      val phys = physNameMap(table, cmC, "clusterBy")
+      actions += Clustering.domainAction(cols.map(c => phys.getOrElse(c, c)))
     }
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -6299,7 +6094,7 @@ object LakeWriter {
     * won't silently apply); a vacuumed-away data file or DV sidecar
     * the old snapshot needs; appendOnly tables (the tombstones are
     * removes); CDF tables (a restore must write change data);
-    * unknown writer obligations (same gate as [[deleteWhere]]).
+    * unknown writer obligations ([[writeGate]]).
     *
     * Scale: driver state is the two snapshots' file lists (each gated
     * by maxSnapshotFiles) and the diff is a set comparison on paths —
@@ -6313,26 +6108,15 @@ object LakeWriter {
     require(versionAsOf >= 0 && versionAsOf <= cur.version,
       s"restoreDelta: version $versionAsOf outside [0, ${cur.version}]")
     val old = DeltaReader.snapshot(spark, dir, Some(versionAsOf))
-    require(cur.configuration.getOrElse("delta.appendOnly", "false") != "true",
-      "restoreDelta: table declares delta.appendOnly=true — a restore tombstones " +
-        "files added since the target version; refusing")
+    writeGate(cur, "restoreDelta", removesRows = true, RowTracking.safeExtra(cur))
     require(!cur.configuration.get("delta.enableChangeDataFeed").contains("true"),
       "restoreDelta: table enables Change Data Feed — a restore must write change " +
         "data files this writer does not produce; refusing to break CDF readers")
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(cur)
-    val unsafe = cur.writerFeatures.filterNot(safeFeatures)
-    require(cur.minWriter <= 5 || (cur.minWriter == 7 && unsafe.isEmpty),
-      s"restoreDelta: table requires writer version ${cur.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a mutation whose obligations this writer cannot honor")
     // metadata must agree: RESTORE across a schema/partitioning/config
     // change would have to re-emit the old metaData action, silently
     // undoing a deliberate evolution — refuse and make the caller
     // decide (parse-compare the schema so key order never matters)
-    require(org.apache.spark.sql.types.DataType.fromJson(old.schemaJson) ==
-        org.apache.spark.sql.types.DataType.fromJson(cur.schemaJson) &&
+    require(tableSchema(old) == tableSchema(cur) &&
         old.partCols == cur.partCols && old.configuration == cur.configuration,
       s"restoreDelta: table metadata changed since version $versionAsOf " +
         "(schema, partition columns or configuration differ) — this writer does " +
@@ -6555,8 +6339,7 @@ object LakeWriter {
     if (RowTracking.enabled(snap) && RowTracking.watermark(snap).isDefined) return
     val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
     locally {
-      val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val table = tableSchema(snap)
       Seq(RowTracking.DefaultRowIdCol, RowTracking.DefaultRowVerCol).foreach(c =>
         require(!table.fieldNames.contains(c),
           s"enableRowTracking: table column '$c' collides with the materialized " +
@@ -6576,18 +6359,8 @@ object LakeWriter {
     actions += s"""{"commitInfo":{"timestamp":0,"operation":"ENABLE ROW TRACKING","operationParameters":{},"readVersion":${snap.version},"engineInfo":"graft"}}"""
     // protocol: (minReader, 7) + the two features, legacy obligations explicit
     locally {
-      val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val legacy = scala.collection.mutable.Set("appendOnly", "invariants")
-      if (snap.minWriter >= 3 &&
-          snap.configuration.keys.exists(_.startsWith("delta.constraints.")))
-        legacy += "checkConstraints"
-      if (snap.minWriter >= 4 &&
-          table.fields.exists(_.metadata.contains("delta.generationExpression")))
-        legacy += "generatedColumns"
-      if (cdfEnabled(snap)) legacy += "changeDataFeed"
-      if (cm != "none") legacy += "columnMapping"
-      val wf = snap.writerFeatures.toSet ++ legacy ++ RowTracking.Features
+      val wf = snap.writerFeatures.toSet ++ versionedObligations(snap, cm) ++
+        RowTracking.Features
       val rdr = math.max(snap.minReader, if (snap.minReader >= 3) 3 else snap.minReader)
       val rfJson = if (rdr >= 3) s""","readerFeatures":${jarr(snap.readerFeatures)}""" else ""
       actions += s"""{"protocol":{"minReaderVersion":$rdr,"minWriterVersion":7$rfJson,"writerFeatures":${jarr(wf)}}}"""

@@ -91,6 +91,13 @@ private[graft] object RowTracking {
     if (enabled(snap) && watermark(snap).isEmpty) Set("domainMetadata")
     else Features
 
+  /** The same for an id-PRESERVING rewrite: rowTracking only when
+    * [[preservedProfileReady]] (domainMetadata still comes from
+    * clustering's features when the table declares it).
+    */
+  def preservedExtra(snap: DeltaReader.Snapshot): Set[String] =
+    if (preservedProfileReady(snap)) Features else Set.empty
+
   /** The domain-metadata action advancing the watermark to `newWm`. */
   def watermarkAction(newWm: Long): String = {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()

@@ -69,6 +69,19 @@ class DeltaIctSpec extends SparkSpec {
     assert(stamps.map(_._2) == stamps.map(_._2).sorted)
   }
 
+  test("OPTIMIZE on an ICT table commits, stamped above its predecessor") {
+    val d = freshDir("opt")
+    LakeWriter.writeDelta(Seq((1L, "a")).toDF("id", "s").coalesce(1), d,
+      configuration = Map("delta.enableInCommitTimestamps" -> "true"))
+    LakeWriter.appendDelta(Seq((2L, "b")).toDF("id", "s").coalesce(1), d)
+    LakeWriter.compactDelta(spark, d, minFiles = 2)
+    val stamps = icts(d)
+    assert(stamps.map(_._1) == Seq(0L, 1L, 2L), stamps)
+    assert(stamps(2)._2 > stamps(1)._2, stamps)
+    assert(DeltaReader.snapshot(spark, d, None).active.size == 1)
+    assert(DeltaReader.read(spark, d).select("id").as[Long].collect().toSet == Set(1L, 2L))
+  }
+
   test("history surfaces the stamp as `timestamp`; monotone mtime when unstamped") {
     val d = freshDir("hist")
     LakeWriter.writeDelta(Seq((1L, "a")).toDF("id", "s"), d,

@@ -119,6 +119,28 @@ class DeltaSizingSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.delta.autoCompact.minNumFiles")
   }
 
+  test("autoCompact folds in-commit-timestamp tables too") {
+    val dir = fresh("ac_ict")
+    spark.conf.set("spark.graft.delta.autoCompact.minNumFiles", "4")
+    try {
+      LakeWriter.writeDelta(spark.range(0, 10).toDF("id"), dir,
+        configuration = Map(
+          "delta.autoOptimize.autoCompact" -> "true",
+          "delta.enableInCommitTimestamps" -> "true"))
+      val maxSeen = (1 to 8).map { k =>
+        LakeWriter.appendDelta(
+          spark.range(k * 10L, k * 10L + 10).toDF("id").coalesce(1), dir)
+        liveFiles(dir).size
+      }.max
+      assert(maxSeen <= 4, s"file count reached $maxSeen under tiny batches")
+      assert(DeltaReader.read(spark, dir).as[Long].collect().toSet ==
+        (0L until 90L).toSet)
+      val ops = DeltaReader.history(spark, dir).select("operation")
+        .as[String].collect()
+      assert(ops.contains("auto compact"), ops.mkString(", "))
+    } finally spark.conf.unset("spark.graft.delta.autoCompact.minNumFiles")
+  }
+
   test("optimizeWrite never scrambles maintenance layouts: cluster OPTIMIZE keeps its files") {
     import graft.sources.Clustering
     val dir = fresh("cl")
